@@ -21,16 +21,37 @@ Scale notes (100 TB):
   in practice (the reference's README flow is depth 4);
 - high-degree hubs (allUsers-style vertices, SURVEY.md §4.4) inflate a
   round's output; the per-round distinct caps re-expansion.
+
+Halting (:func:`_superstep`): fixpoint loops count a round's new or
+changed rows with an ``Observation`` on that round's own checkpoint,
+not with a separate ``take(1)`` / ``count()`` probe job. The BFS,
+shortest-path, CC, trim and SCC loops raise
+:class:`FixpointNotReached` when ``max_iter`` supersteps pass without
+an empty or unchanged round, instead of returning a partial answer.
+The depth-bounded searches (``all_paths``, ``dag_path_counts``,
+``reach_cardinality_sketch``, ``stress_centrality``), the fixed-round
+APIs (LPA, PPR, HITS) and the bounded peels (``k_core``,
+``coreness``, ``k_truss``, ``dag_levels``) keep their cut-off.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from .traversal import Graph
 
 DEFAULT_MAX_ITER = 50
+
+
+class FixpointNotReached(RuntimeError):
+    """A fixpoint loop ran ``max_iter`` supersteps without an empty or
+    unchanged round; its state at that point is not the answer."""
+
+    def __init__(self, name: str, max_iter: int):
+        super().__init__(
+            f"{name}: no fixpoint within max_iter={max_iter} supersteps"
+        )
 
 
 # Past any physically meaningful size (2^200 bytes), a plan's size
@@ -85,6 +106,68 @@ def _truncate(df: DataFrame) -> DataFrame:
         return ck
 
 
+def _edge_pairs(g: Graph, edge_label: str | None) -> DataFrame:
+    """(src, dst) of the edges labelled ``edge_label`` (all edges when
+    it is None)."""
+    e = g.edges
+    if edge_label is not None:
+        e = e.filter(F.col("label") == edge_label)
+    return e.select("src", "dst")
+
+
+def _superstep(
+    df: DataFrame, changed: Column | None = None
+) -> tuple[DataFrame, int]:
+    """Materialize one round of a fixpoint loop (:func:`_truncate`) and
+    return it with its row count — or, given ``changed``, the count
+    of rows where that flag holds. The count comes from an
+    ``Observation`` filled while the checkpoint is computed (it reads
+    0 on an empty frame), so the halting test adds no job."""
+    obs = Observation()
+    n = F.count(F.lit(1)) if changed is None else F.count_if(changed)
+    ck = _truncate(df.observe(obs, n.alias("n")))
+    return ck, obs.get["n"]
+
+
+def _bfs(
+    start: DataFrame,
+    edges: DataFrame,
+    max_iter: int,
+    name: str,
+    key: tuple[str, ...] = ("id",),
+) -> DataFrame:
+    """Frontier BFS from ``start`` along ``edges`` (src, dst) to the
+    empty-frontier fixpoint. ``key`` is the row key of the state, its
+    last column the vertex id (``("seed", "id")`` runs one BFS per
+    seed). Returns (*key, distance) for every reached row, the start
+    rows at distance 0 — first-seen depth is minimal in BFS.
+
+    One checkpoint per superstep: the new frontier, deduped and
+    anti-joined against the reached set; its row count is the halting
+    test. The reached set is the union of the checkpointed frontiers
+    and is never re-materialized."""
+    *by, vid = key
+    # distance is checkpointed data, not a literal the optimizer could
+    # fold into the caller's expressions (1 / distance on a start-only
+    # result would fail at planning time under ANSI)
+    frontier = _truncate(
+        start.select(*key).dropDuplicates().withColumn("distance", F.lit(0))
+    )
+    dist = frontier
+    for depth in range(1, max_iter + 1):
+        nxt, n = _superstep(
+            frontier.join(edges, frontier[vid] == edges.src)
+            .select(*by, F.col("dst").alias(vid))
+            .dropDuplicates()
+            .join(dist, list(key), "left_anti")
+        )
+        if n == 0:
+            return dist
+        dist = dist.unionByName(nxt.withColumn("distance", F.lit(depth)))
+        frontier = nxt
+    raise FixpointNotReached(name, max_iter)
+
+
 def reachable_from(
     g: Graph,
     source_ids: DataFrame,
@@ -96,30 +179,17 @@ def reachable_from(
     following out-edges — BFS to fixpoint.
 
     The "does user U (transitively) have role R / project P" question
-    (README.md:15-32) is `reachable_from(g, {U})`.
+    (README.md:15-32) is `reachable_from(g, {U})`. Raises
+    :class:`FixpointNotReached` when the frontier is still non-empty
+    after ``max_iter`` supersteps.
     """
-    edges = g.edges
-    if edge_label is not None:
-        edges = edges.filter(F.col("label") == edge_label)
-    edges = edges.select("src", "dst")
-
-    frontier = _truncate(source_ids.select("id").dropDuplicates())
-    visited = frontier
-    for _ in range(max_iter):
-        nxt = (
-            frontier.join(edges, frontier.id == edges.src)
-            .select(F.col("dst").alias("id"))
-            .dropDuplicates()
-            .join(visited, ["id"], "left_anti")
-        )
-        nxt = _truncate(nxt)
-        if not nxt.take(1):
-            break
-        visited = _truncate(visited.unionByName(nxt))
-        frontier = nxt
-    if include_sources:
-        return visited
-    return visited.join(source_ids.select("id"), ["id"], "left_anti")
+    dist = _bfs(
+        source_ids.select("id"), _edge_pairs(g, edge_label), max_iter,
+        "reachable_from",
+    )
+    if not include_sources:
+        dist = dist.filter(F.col("distance") > 0)
+    return dist.select("id")
 
 
 def reaching_to(
@@ -150,10 +220,7 @@ def k_hop(
 ) -> DataFrame:
     """Exactly-k-hop frontier (bag-collapsed): chained joins, no loop
     state — the SQL-expressible bounded form of A17 (SURVEY.md §2A)."""
-    edges = g.edges
-    if edge_label is not None:
-        edges = edges.filter(F.col("label") == edge_label)
-    edges = edges.select("src", "dst")
+    edges = _edge_pairs(g, edge_label)
     cur = source_ids.select("id").dropDuplicates()
     for _ in range(k):
         cur = (
@@ -175,33 +242,12 @@ def shortest_paths(
     the GraphX ShortestPaths analog. Returns (id, distance) for every
     reachable vertex, sources at distance 0.
 
-    Same frontier-BFS shape as reachable_from (one shuffle per round,
-    checkpointed), tracking the round at which each vertex is first
-    reached — first-seen depth is minimal in BFS."""
-    edges = g.edges
-    if edge_label is not None:
-        edges = edges.filter(F.col("label") == edge_label)
-    edges = edges.select("src", "dst")
-
-    frontier = _truncate(source_ids.select("id").dropDuplicates())
-    dist = _truncate(frontier.select("id", F.lit(0).cast("int").alias("distance")))
-    for depth in range(1, max_iter + 1):
-        nxt = (
-            frontier.join(edges, frontier.id == edges.src)
-            .select(F.col("dst").alias("id"))
-            .dropDuplicates()
-            .join(dist, ["id"], "left_anti")
-        )
-        nxt = _truncate(nxt)
-        if not nxt.take(1):
-            break
-        dist = _truncate(
-            dist.unionByName(
-                nxt.select("id", F.lit(depth).cast("int").alias("distance"))
-            )
-        )
-        frontier = nxt
-    return dist
+    Same frontier BFS as reachable_from (:func:`_bfs`) — first-seen
+    depth is minimal in BFS."""
+    return _bfs(
+        source_ids.select("id"), _edge_pairs(g, edge_label), max_iter,
+        "shortest_paths",
+    )
 
 
 def weighted_shortest_paths(
@@ -230,50 +276,50 @@ def weighted_shortest_paths(
     grows monotonically, so no INF-sentinel full-vertex table is
     materialized.
     """
-    dist = _truncate(
-        source_ids.select("id")
-        .dropDuplicates()
-        .withColumn("dist", F.lit(0.0).cast("double"))
-    )
     ids = g.vertices.select("id")
     edges = g.edges.select("src", "dst", F.col(weight_col).alias("__w"))
     # r14 (guide §2.3 — shuffle fewer bytes): DELTA relaxation. Under
     # monotone min-combining, a vertex whose dist did not improve last
     # round re-sends exactly the messages it already sent, and those
     # were already min-merged — so only the FRONTIER (last round's
-    # improved set) needs to send. Per-round join input shrinks from
-    # O(|reached| ⋈ E) to O(|frontier| ⋈ E); final dist is identical
-    # (each round's improved set is unchanged, pinned by the
-    # BFS-equivalence property test). Both endpoint semi-joins against
-    # the vertex relation preserve the original triplet view's
-    # inner-join semantics for ids that are not graph vertices.
-    frontier = dist
+    # improved set, flagged ``__chg``) needs to send. Both endpoint
+    # semi-joins against the vertex relation preserve the original
+    # triplet view's inner-join semantics for ids that are not graph
+    # vertices. The state carries the flag, so each superstep is one
+    # job: the full-outer merge of the candidates into the reached
+    # set, whose flagged-row count is the halting test.
+    dist = _truncate(
+        source_ids.select("id")
+        .dropDuplicates()
+        .select("id", F.lit(0.0).alias("dist"), F.lit(True).alias("__chg"))
+    )
     for _ in range(max_iter):
         cand = (
-            frontier.join(ids, ["id"], "left_semi")
+            dist.filter("__chg")
+            .join(ids, ["id"], "left_semi")
             .join(edges, F.col("id") == edges.src)
             .select(
                 F.col("dst").alias("id"),
-                (F.col("dist") + F.col("__w")).alias("__msg"),
+                (F.col("dist") + F.col("__w")).cast("double").alias("__msg"),
             )
             .join(ids, ["id"], "left_semi")
             .groupBy("id")
             .agg(F.min("__msg").alias("cand"))
         )
-        improved = (
-            cand.filter(F.col("cand").isNotNull())
-            .join(dist, ["id"], "left_outer")
-            .filter(F.col("dist").isNull() | (F.col("cand") < F.col("dist")))
-            .select("id", F.col("cand").cast("double").alias("dist"))
+        dist, n = _superstep(
+            dist.join(cand, ["id"], "full_outer").select(
+                "id",
+                F.least("dist", "cand").alias("dist"),
+                (
+                    F.col("cand").isNotNull()
+                    & (F.col("dist").isNull() | (F.col("cand") < F.col("dist")))
+                ).alias("__chg"),
+            ),
+            F.col("__chg"),
         )
-        improved = _truncate(improved)
-        if not improved.take(1):
-            break
-        dist = _truncate(
-            dist.join(improved, ["id"], "left_anti").unionByName(improved)
-        )
-        frontier = improved
-    return dist
+        if n == 0:
+            return dist.drop("__chg")
+    raise FixpointNotReached("weighted_shortest_paths", max_iter)
 
 
 def all_paths(
@@ -301,10 +347,7 @@ def all_paths(
     if key_col is None:
         key_col = natural_key_col()
     verts = g.vertices.select("id", key_col.alias("__k"))
-    edges = g.edges
-    if edge_label is not None:
-        edges = edges.filter(F.col("label") == edge_label)
-    edges = edges.select("src", "dst")
+    edges = _edge_pairs(g, edge_label)
 
     frontier = _truncate(
         source_ids.select("id")
@@ -324,8 +367,8 @@ def all_paths(
                 F.concat("path", F.array("__k")).alias("path"),
             )
         )
-        nxt = _truncate(nxt)
-        if not nxt.take(1):
+        nxt, n = _superstep(nxt)
+        if n == 0:
             break
         reached = nxt.join(tgt, ["id"], "left_semi").withColumn(
             "depth", F.lit(depth).cast("int")
@@ -387,8 +430,8 @@ def dag_path_counts(
             .groupBy(F.col("dst").alias("v"))
             .agg(F.sum("c").alias("c"))
         )
-        step = _truncate(step)
-        if step.isEmpty():
+        step, n = _superstep(step)
+        if n == 0:
             break
         arrivals.append(
             step.join(t_ids, step.v == F.col("__t"), "left_semi")
@@ -560,8 +603,8 @@ def reach_cardinality_sketch(
             .groupBy(F.col("dst").alias("v"), "reg")
             .agg(F.max("rho").alias("rho"))
         )
-        step = _truncate(step)
-        if step.isEmpty():
+        step, n = _superstep(step)
+        if n == 0:
             break
         arrivals.append(
             step.join(t_ids, step.v == F.col("__t"), "left_semi")
@@ -596,48 +639,24 @@ def reach_cardinality_sketch(
     )
 
 
-def connected_components(
-    g: Graph, max_iter: int = DEFAULT_MAX_ITER, shortcut: bool = True
+def _min_label(
+    comp: DataFrame,
+    edges: DataFrame,
+    shortcut: bool,
+    max_iter: int,
+    name: str,
 ) -> DataFrame:
-    """Undirected connected components via hash-min label propagation
-    with POINTER HALVING: every vertex adopts the min component id
-    among itself and its neighbours, then jumps to its label's label
-    (comp[v] <- comp[comp[v]], the Shiloach-Vishkin shortcut). Returns
-    (id, component) where component is the min vertex id of the
-    component.
-
-    Plain hash-min moves a label one hop per round — O(diameter)
-    rounds, which the round-8 profile showed is the wrong regime for
-    near-duplicate pair graphs (the sf0.1 semantic graph at tau=0.4
-    has chain diameter ~16: 17 rounds, and every round is a full
-    shuffle at 100 TB). The shortcut doubles a label's reach per
-    round, so convergence is O(log diameter) for one extra O(n)
-    equi-join per round — strictly fewer total shuffles whenever
-    diameter > ~4. Correctness: comp[v] always names a vertex of v's
-    own component and never increases (both steps preserve the
-    invariant), and a no-change fixpoint of the combined operator is
-    in particular a hash-min fixpoint, where symmetric edges force
-    comp constant per component and anchored at the min id.
-
-    The convergence flag is computed INSIDE the per-round frame (one
-    filter over the just-checkpointed rows) rather than by re-joining
-    new-vs-old labels — one fewer shuffle join and one fewer job per
-    round. ``shortcut=False`` recovers plain hash-min (the right
-    choice only when diameter is known tiny and the extra join isn't
-    worth it)."""
-    both = (
-        g.edges.select("src", "dst")
-        .unionByName(
-            g.edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        .dropDuplicates()
-    )
-    both = _truncate(both)
-    comp = g.vertices.select("id", F.col("id").alias("component"))
-    comp = _truncate(comp)
+    """Min-label propagation to fixpoint: every vertex of ``comp``
+    (id, component) adopts the min component among itself and its
+    in-neighbours along ``edges`` (src, dst) — with ``shortcut``, then
+    jumps to its label's label (comp[v] <- comp[comp[v]]). At the
+    fixpoint component(v) is the least initial label that reaches v:
+    both steps keep component(v) an id that reaches v and never
+    increase it. One superstep per round, halting on no ``__chg``
+    row."""
     for _ in range(max_iter):
         neighbour_min = (
-            comp.join(both, comp.id == both.src)
+            comp.join(edges, comp.id == edges.src)
             .select(F.col("dst").alias("id"), "component")
             .groupBy("id")
             .agg(F.min("component").alias("n_component"))
@@ -666,12 +685,52 @@ def connected_components(
                     F.col("__chg") | (F.col("__pcomp") < F.col("component"))
                 ).alias("__chg"),
             )
-        new_comp = _truncate(new_comp)
-        changed = new_comp.filter(F.col("__chg")).take(1)
+        new_comp, n = _superstep(new_comp, F.col("__chg"))
         comp = new_comp.drop("__chg")
-        if not changed:
-            break
-    return comp
+        if n == 0:
+            return comp
+    raise FixpointNotReached(name, max_iter)
+
+
+def connected_components(
+    g: Graph, max_iter: int = DEFAULT_MAX_ITER, shortcut: bool = True
+) -> DataFrame:
+    """Undirected connected components via hash-min label propagation
+    with POINTER HALVING: every vertex adopts the min component id
+    among itself and its neighbours, then jumps to its label's label
+    (comp[v] <- comp[comp[v]], the Shiloach-Vishkin shortcut). Returns
+    (id, component) where component is the min vertex id of the
+    component.
+
+    Plain hash-min moves a label one hop per round — O(diameter)
+    rounds, which the round-8 profile showed is the wrong regime for
+    near-duplicate pair graphs (the sf0.1 semantic graph at tau=0.4
+    has chain diameter ~16: 17 rounds, and every round is a full
+    shuffle at 100 TB). The shortcut doubles a label's reach per
+    round, so convergence is O(log diameter) for one extra O(n)
+    equi-join per round — strictly fewer total shuffles whenever
+    diameter > ~4. Correctness: comp[v] always names a vertex of v's
+    own component and never increases (both steps preserve the
+    invariant), and a no-change fixpoint of the combined operator is
+    in particular a hash-min fixpoint, where symmetric edges force
+    comp constant per component and anchored at the min id.
+
+    The convergence flag is computed INSIDE the per-round frame and
+    counted while it is checkpointed (:func:`_superstep`) rather than
+    by re-joining new-vs-old labels or a probe job — one checkpoint
+    per round. ``shortcut=False`` recovers plain hash-min (the right
+    choice only when diameter is known tiny and the extra join isn't
+    worth it)."""
+    both = (
+        g.edges.select("src", "dst")
+        .unionByName(
+            g.edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        )
+        .dropDuplicates()
+    )
+    both = _truncate(both)
+    comp = _truncate(g.vertices.select("id", F.col("id").alias("component")))
+    return _min_label(comp, both, shortcut, max_iter, "connected_components")
 
 
 def connected_components_contract(
@@ -848,16 +907,20 @@ def connected_components_star(
         return rehung
 
     for _ in range(max_iter):
-        nxt = _truncate(small_star(large_star(e)))
-        # Symmetric-difference emptiness via anti-joins (both frames
-        # are checkpointed, so no self-referencing-plan hazard).
-        changed = (
-            nxt.join(e, ["u", "v"], "left_anti").take(1)
-            or e.join(nxt, ["u", "v"], "left_anti").take(1)
+        # One flagged full-outer join of the new edge list against the
+        # old: rows missing on either side are the symmetric
+        # difference, counted while the result is checkpointed.
+        diff, n = _superstep(
+            small_star(large_star(e))
+            .withColumn("__new", F.lit(True))
+            .join(e.withColumn("__old", F.lit(True)), ["u", "v"], "full_outer"),
+            F.col("__new").isNull() | F.col("__old").isNull(),
         )
-        e = nxt
-        if not changed:
+        e = diff.filter(F.col("__new")).select("u", "v")
+        if n == 0:
             break
+    else:
+        raise FixpointNotReached("connected_components_star", max_iter)
     # Fixpoint: edges form a star forest (u -> component min). Roots
     # (and isolated vertices) map to themselves.
     parent = e.filter(F.col("v") < F.col("u")).select(
@@ -1519,36 +1582,11 @@ def multi_source_distances(
     estimate converges at the Hoeffding rate, which is why the
     sampled form IS the scale form.
     """
-    edges = g.edges
-    if edge_label is not None:
-        edges = edges.filter(F.col("label") == edge_label)
-    edges = edges.select("src", "dst")
-
-    frontier = _truncate(
-        seeds.select(F.col("seed"), F.col("seed").alias("id")).dropDuplicates()
+    return _bfs(
+        seeds.select("seed", F.col("seed").alias("id")),
+        _edge_pairs(g, edge_label), max_iter, "multi_source_distances",
+        key=("seed", "id"),
     )
-    dist = _truncate(
-        frontier.select("seed", "id", F.lit(0).cast("int").alias("distance"))
-    )
-    for depth in range(1, max_iter + 1):
-        nxt = (
-            frontier.join(edges, frontier.id == edges.src)
-            .select("seed", F.col("dst").alias("id"))
-            .dropDuplicates()
-            .join(dist, ["seed", "id"], "left_anti")
-        )
-        nxt = _truncate(nxt)
-        if not nxt.take(1):
-            break
-        dist = _truncate(
-            dist.unionByName(
-                nxt.select(
-                    "seed", "id", F.lit(depth).cast("int").alias("distance")
-                )
-            )
-        )
-        frontier = nxt
-    return dist
 
 
 def hits(
@@ -1570,10 +1608,7 @@ def hits(
     materializes anything wider than (id, double).
     """
     v = g.vertices.select("id")
-    edges = g.edges
-    if edge_label is not None:
-        edges = edges.filter(F.col("label") == edge_label)
-    edges = _truncate(edges.select("src", "dst"))
+    edges = _truncate(_edge_pairs(g, edge_label))
 
     hub = _truncate(v.select("id", F.lit(1.0).alias("hub")))
     # r14 (guide §2.4/§5): each half-round's un-normalized scores
@@ -1689,9 +1724,7 @@ def random_walks(
     fixed)."""
     from .schema import natural_key_col
 
-    e = g.edges
-    if edge_label is not None:
-        e = e.filter(F.col("label") == edge_label)
+    e = _edge_pairs(g, edge_label)
     from pyspark.sql.window import Window
 
     vk = g.vertices.select(
@@ -1827,10 +1860,7 @@ def stress_centrality(
     unrolled oracle); 2*max_depth+1 narrow shuffles total, frontier
     never wider than (seed, id, count). ``seeds`` has column ``seed``.
     Returns (id, stress) for interior vertices with stress > 0."""
-    edges = g.edges
-    if edge_label is not None:
-        edges = edges.filter(F.col("label") == edge_label)
-    edges = edges.select("src", "dst").dropDuplicates()
+    edges = _edge_pairs(g, edge_label).dropDuplicates()
 
     lv = [
         _truncate(
@@ -1851,8 +1881,8 @@ def stress_centrality(
             .groupBy("seed", "id")
             .agg(F.sum("sig").alias("sig"))
         )
-        nxt = _truncate(nxt)
-        if not nxt.take(1):
+        nxt, n = _superstep(nxt)
+        if n == 0:
             break
         lv.append(nxt)
         seen = _truncate(seen.unionByName(nxt.select("seed", "id")))
@@ -1907,6 +1937,36 @@ def stress_centrality(
     )
 
 
+def _trim(
+    e: DataFrame, max_iter: int, name: str
+) -> tuple[DataFrame, int]:
+    """Kahn peel of the edge list ``e`` (src, dst) to a fixpoint: each
+    round drops every edge with an endpoint that has no in-edge or no
+    out-edge among the remaining edges — the TRIM step of FW-BW-Trim
+    (Hong et al., SC'13). The survivors are the subgraph induced by
+    the vertices that keep both an in- and an out-edge (a vertex in
+    both sets stays in both as the set shrinks, so none of its edges
+    is ever dropped); every peeled vertex is a singleton SCC. Returns
+    the checkpointed core and its edge count. One checkpoint per
+    round; it halts when a round peels no edge."""
+    cur, n = _superstep(e)
+    for _ in range(max_iter):
+        if n == 0:
+            return cur, 0
+        both = cur.select("src").dropDuplicates().join(
+            cur.select(F.col("dst").alias("src")), ["src"], "left_semi"
+        )
+        nxt, m = _superstep(
+            cur.join(both, ["src"], "left_semi").join(
+                both.select(F.col("src").alias("dst")), ["dst"], "left_semi"
+            )
+        )
+        if m == n:
+            return nxt, m
+        cur, n = nxt, m
+    raise FixpointNotReached(name, max_iter)
+
+
 def cycle_core(
     g: Graph,
     edge_label: str | None = "in",
@@ -1926,40 +1986,18 @@ def cycle_core(
     reference's recursive getGroupMembers crawl (main.go:257-303)
     would simply not terminate on one.
 
-    Each round is two dropDuplicates + two semi-joins shuffling on
-    the endpoint ids — the k_core peel shape — lineage truncated per
-    round, 1-row convergence probe. Returns (id,); empty on a DAG
-    (the built IAM graph is one — pinned by the catalog census;
-    literal cyclic graphs are pinned by unit test)."""
-    e = g.edges
-    if edge_label is not None:
-        e = e.filter(F.col("label") == edge_label)
+    The peel is :func:`_trim`, the trim step SCC runs first. Returns
+    (id,); empty on a DAG (the built IAM graph is one — pinned by the
+    catalog census; literal cyclic graphs are pinned by unit test)."""
     # Self-loops are KEPT: a group directly a member of itself is the
     # simplest membership loop the audit exists to catch (and hangs
     # the reference's recursive crawl exactly like a 2-cycle). A
     # self-loop vertex holds both degrees, so the peel retains it.
-    cur = _truncate(e.select("src", "dst").dropDuplicates())
-    for _ in range(max_iter):
-        has_out = cur.select("src").dropDuplicates()
-        has_in = cur.select(F.col("dst").alias("src")).dropDuplicates()
-        both = has_out.join(has_in, ["src"], "left_semi")
-        nxt = _truncate(
-            cur.join(both, ["src"], "left_semi").join(
-                both.select(F.col("src").alias("dst")),
-                ["dst"],
-                "left_semi",
-            )
-        )
-        # converged when no edge was peeled this round
-        if cur.count() == nxt.count():
-            cur = nxt
-            break
-        cur = nxt
-    return (
-        cur.select(F.col("src").alias("id"))
-        .unionByName(cur.select(F.col("dst").alias("id")))
-        .dropDuplicates()
+    core, _ = _trim(
+        _edge_pairs(g, edge_label).dropDuplicates(), max_iter, "cycle_core"
     )
+    # every core vertex keeps an out-edge, so the sources list them all
+    return core.select(F.col("src").alias("id")).dropDuplicates()
 
 
 def k_truss(
@@ -2127,115 +2165,67 @@ def strongly_connected_components(
     (id, scc) where scc = the MIN id of the component (unique,
     deterministic, engine-reproducible).
 
-    Per outer round: (1) propagate min ids FORWARD to fixpoint —
-    color(v) = min over {v} + colors of in-neighbours, so color(v) is
-    the least id that can reach v in the remaining graph; (2) every
-    vertex whose color is itself is a ROOT, and for members of
-    SCC(root), root is the component min (a smaller member would have
-    recolored the root); (3) confirm backward within each color:
-    starting from the roots, walk REVERSED edges restricted to
-    equal-colored endpoints — confirmed vertices are exactly
-    SCC(root); (4) emit confirmed components, delete their vertices,
-    repeat on the residue. Every round settles at least every current
-    root's SCC, so the outer loop runs O(longest chain of nested
-    colors) times — on audit-style graphs 1-2 rounds. All steps are
-    equi-joins + min-aggs, lineage truncated per round; per-fixpoint
-    rounds are bounded by the remaining graph's directed diameter.
-    Singletons (including vertices with no cycle through them) emit
-    themselves — total output rows == input vertices."""
-    remaining_v = _truncate(vertices.select("id").dropDuplicates())
-    e_all = _truncate(
+    Per outer round: (0) TRIM (:func:`_trim`) — peel, to a fixpoint,
+    every vertex with no in-edge or no out-edge in the remaining graph;
+    each is a singleton SCC; (1) propagate min ids FORWARD over the
+    trimmed core to fixpoint — color(v) = the least id that can reach
+    v in the remaining graph; (2) every vertex whose color is itself
+    is a ROOT, and for members of SCC(root), root is the component min
+    (a smaller member would have recolored the root); (3) confirm
+    backward within each color: BFS from the roots along REVERSED
+    edges between equal-colored endpoints — confirmed vertices are
+    exactly SCC(root); (4) delete them and repeat on the residue.
+    Every round settles at least every current root's SCC, so the
+    outer loop runs O(longest chain of nested colors) times. Trim
+    first keeps that small on audit-style graphs: the built IAM graph
+    is a DAG, which trim settles whole in the first round, where
+    coloring alone took 4 outer rounds. Per-fixpoint rounds are
+    bounded by the remaining graph's directed diameter. Vertices not
+    confirmed into a larger SCC emit themselves — total output rows
+    == input vertices."""
+    name = "strongly_connected_components"
+    verts = vertices.select("id").dropDuplicates()
+    e = (
         edges.select("src", "dst")
         .filter(F.col("src") != F.col("dst"))
         .dropDuplicates()
+        .join(verts.select(F.col("id").alias("src")), ["src"], "left_semi")
+        .join(verts.select(F.col("id").alias("dst")), ["dst"], "left_semi")
     )
-    out: DataFrame | None = None
+    settled = verts.select("id", F.col("id").alias("scc")).limit(0)
     for _ in range(max_iter):
-        if not remaining_v.take(1):
-            break
-        e = e_all.join(
-            remaining_v.select(F.col("id").alias("src")),
-            ["src"],
-            "left_semi",
-        ).join(
-            remaining_v.select(F.col("id").alias("dst")),
-            ["dst"],
-            "left_semi",
-        )
-        e = _truncate(e)
-        # (1) forward min-coloring to fixpoint
-        color = _truncate(
-            remaining_v.select("id", F.col("id").alias("color"))
-        )
-        for _ in range(max_iter):
-            pushed = (
-                color.join(e, color.id == e.src)
-                .select(F.col("dst").alias("id"), "color")
-                .groupBy("id")
-                .agg(F.min("color").alias("n_color"))
+        e, n = _trim(e, max_iter, name)
+        if n == 0:
+            return verts.join(settled, ["id"], "left_outer").select(
+                "id", F.coalesce("scc", "id").alias("scc")
             )
-            new_color = color.join(pushed, ["id"], "left_outer").select(
-                "id",
-                F.least(
-                    F.col("color"), F.coalesce("n_color", "color")
-                ).alias("color"),
-                (
-                    F.col("n_color").isNotNull()
-                    & (F.col("n_color") < F.col("color"))
-                ).alias("__chg"),
-            )
-            new_color = _truncate(new_color)
-            changed = new_color.filter(F.col("__chg")).take(1)
-            color = new_color.drop("__chg")
-            if not changed:
-                break
-        # (2)+(3) backward confirmation restricted to equal colors:
-        # frontier starts at the roots; step v <- w along an edge
-        # (v, w) with color(v) == color(w) and w confirmed.
-        csrc = color.select(F.col("id").alias("src"), F.col("color").alias("__cs"))
-        cdst = color.select(F.col("id").alias("dst"), F.col("color").alias("__cd"))
-        e_same = _truncate(
+        color = _min_label(
+            _truncate(
+                e.select(F.col("src").alias("id"))
+                .dropDuplicates()
+                .withColumn("component", F.col("id"))
+            ),
+            e, False, max_iter, name,
+        )
+        # step v <- w along an edge (v, w) with color(v) == color(w);
+        # the BFS carries each root's id to the vertices it confirms
+        csrc = color.select(F.col("id").alias("src"), F.col("component").alias("__cs"))
+        cdst = color.select(F.col("id").alias("dst"), F.col("component").alias("__cd"))
+        back = _truncate(
             e.join(csrc, ["src"])
             .join(cdst, ["dst"])
             .filter(F.col("__cs") == F.col("__cd"))
-            .select("src", "dst")
+            .select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
-        confirmed = _truncate(
-            color.filter(F.col("id") == F.col("color")).select("id")
-        )
-        frontier = confirmed
-        for _ in range(max_iter):
-            step = (
-                e_same.join(
-                    frontier.select(F.col("id").alias("dst")),
-                    ["dst"],
-                    "left_semi",
-                )
-                .select(F.col("src").alias("id"))
-                .dropDuplicates()
-                .join(confirmed, ["id"], "left_anti")
-            )
-            step = _truncate(step)
-            if not step.take(1):
-                break
-            confirmed = _truncate(confirmed.unionByName(step))
-            frontier = step
-        found = color.join(confirmed, ["id"], "left_semi").select(
-            "id", F.col("color").alias("scc")
-        )
-        found = _truncate(found)
-        out = found if out is None else out.unionByName(found)
-        out = _truncate(out)
-        remaining_v = _truncate(
-            remaining_v.join(found.select("id"), ["id"], "left_anti")
-        )
-    return (
-        out
-        if out is not None
-        else vertices.select(
-            "id", F.col("id").alias("scc")
-        ).limit(0)
-    )
+        confirmed = _bfs(
+            color.filter(F.col("id") == F.col("component")), back, max_iter,
+            name, key=("component", "id"),
+        ).select("id", F.col("component").alias("scc"))
+        settled = settled.unionByName(confirmed)
+        e = e.join(
+            confirmed.select(F.col("id").alias("src")), ["src"], "left_anti"
+        ).join(confirmed.select(F.col("id").alias("dst")), ["dst"], "left_anti")
+    raise FixpointNotReached(name, max_iter)
 
 
 def dag_levels(
@@ -2259,11 +2249,8 @@ def dag_levels(
     loop stops at max_iter, so run cycle_core /
     strongly_connected_components first when acyclicity is not known.
     Returns (id, level)."""
-    e = g.edges
-    if edge_label is not None:
-        e = e.filter(F.col("label") == edge_label)
     e = _truncate(
-        e.select("src", "dst")
+        _edge_pairs(g, edge_label)
         .filter(F.col("src") != F.col("dst"))
         .dropDuplicates()
     )

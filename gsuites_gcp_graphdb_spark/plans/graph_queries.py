@@ -62,11 +62,11 @@ def materialize_graph_store(
 
     if buckets is None:
         # Bucket count is a LAYOUT knob: at cluster scale size it so
-        # each bucket holds ~128MB-1GB; locally match the build path's
-        # edge partitioning (par // 2) — the r8 A/B showed 32 buckets
-        # on a 32-thread box doubles per-stage task count and costs
-        # iterative queries (20+ edge scans) ~60% (hits 4.6 -> 7.4s),
-        # while 16 restores parity with a slight win (4.27s).
+        # each bucket holds ~128MB-1GB; locally par // 2 — the r8 A/B
+        # showed 32 buckets on a 32-thread box doubles per-stage task
+        # count and costs iterative queries (20+ edge scans) ~60%
+        # (hits 4.6 -> 7.4s), while 16 restores parity with a slight
+        # win (4.27s).
         buckets = max(8, spark.sparkContext.defaultParallelism // 2)
     prefix = graph_store_prefix(sf_dir)
     # reuse the session's already-built (cached) graph when present —
@@ -105,17 +105,9 @@ def _graph(spark: SparkSession, sf_dir: str) -> Graph:
             g = load_bucketed(spark, prefix, edges_by="dst").cache()
             _GRAPH_CACHE[key] = g
             return g
-        v, e = build_graph(spark, sf_dir)
-        # Round-robin repartition before caching: the raw build is a
-        # union of per-label/per-relation pieces with wildly different
-        # sizes, so cached partitions are skewed (one holds all users)
-        # and every downstream scan straggles. Evening them out cut
-        # the flagship query ~30% (measured at sf0.1).
-        par = spark.sparkContext.defaultParallelism
-        g = Graph(
-            v.repartition(max(8, par // 4)),
-            e.repartition(max(16, par // 2)),
-        ).cache()
+        # build_graph rebalances both frames, so the cache holds
+        # evenly sized partitions (see its docstring)
+        g = Graph(*build_graph(spark, sf_dir)).cache()
         _GRAPH_CACHE[key] = g
     return g
 

@@ -18,6 +18,17 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def default_driver_memory() -> str:
+    """Half of physical RAM, capped at 32g; ``SPARK_GRAFT_DRIVER_MEM``
+    overrides. In local mode the driver heap is the whole cluster, and
+    a fixed 32g oversubscribes any box with less than 64 GiB."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    return f"{min(32 * 1024, ram_mb // 2)}m"
+
+
 def get_spark(app_name: str = "gsuites-gcp-graphdb-spark") -> SparkSession:
     """Build (or reuse) the session.
 
@@ -55,9 +66,9 @@ def get_spark(app_name: str = "gsuites-gcp-graphdb-spark") -> SparkSession:
         # block lives in it. 8g forced constant full GCs on the
         # 88-query bench suite (measured: common-suite 125.6s at 8g
         # vs 112.8s at 32g, identical workload/box) and OOMed a
-        # frontier-heavy probe that 32g absorbs. The box has 128 GiB;
-        # a real cluster sizes executor memory per node instead.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
+        # frontier-heavy probe that 32g absorbs, on a 128 GiB box. A
+        # real cluster sizes executor memory per node instead.
+        .config("spark.driver.memory", default_driver_memory())
         .config("spark.ui.enabled", "false")
     )
     return builder.getOrCreate()
