@@ -22,19 +22,21 @@ Scale notes (100 TB):
 - high-degree hubs (allUsers-style vertices, SURVEY.md §4.4) inflate a
   round's output; the per-round distinct caps re-expansion.
 
-Halting (:func:`_superstep`): fixpoint loops count a round's new or
+Halting (:func:`_superstep`): fixpoint loops count a round's rows or
 changed rows with an ``Observation`` on that round's own checkpoint,
-not with a separate ``take(1)`` / ``count()`` probe job. The BFS,
-shortest-path, CC, trim and SCC loops raise
-:class:`FixpointNotReached` when ``max_iter`` supersteps pass without
-an empty or unchanged round, instead of returning a partial answer.
-The depth-bounded searches (``all_paths``, ``dag_path_counts``,
-``reach_cardinality_sketch``, ``stress_centrality``), the fixed-round
-APIs (LPA, PPR, HITS) and the bounded peels (``k_core``,
-``coreness``, ``k_truss``, ``dag_levels``) keep their cut-off.
+not with a separate ``take(1)`` / ``count()`` probe job. Every loop
+that runs to convergence raises :class:`FixpointNotReached` when
+``max_iter`` supersteps pass without an empty or unchanged round,
+instead of returning a partial answer. Only two kinds of loop keep a
+cut-off: the fixed-round APIs (PageRank, LPA, PPR, HITS) and the
+depth-bounded searches (``all_paths``, ``dag_path_counts``,
+``bidirectional_distance``, ``reach_cardinality_sketch``,
+``stress_centrality``).
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
@@ -115,6 +117,18 @@ def _edge_pairs(g: Graph, edge_label: str | None) -> DataFrame:
     return e.select("src", "dst")
 
 
+def symmetric_edges(e: DataFrame) -> DataFrame:
+    """The deduplicated (src, dst) pairs of ``e`` in both directions —
+    the undirected view of a directed edge list."""
+    return (
+        e.select("src", "dst")
+        .unionByName(
+            e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        )
+        .dropDuplicates()
+    )
+
+
 def _superstep(
     df: DataFrame, changed: Column | None = None
 ) -> tuple[DataFrame, int]:
@@ -166,6 +180,50 @@ def _bfs(
         dist = dist.unionByName(nxt.withColumn("distance", F.lit(depth)))
         frontier = nxt
     raise FixpointNotReached(name, max_iter)
+
+
+def _peel(
+    e: DataFrame,
+    keep: Callable[[DataFrame], DataFrame],
+    max_iter: int,
+    name: str,
+) -> tuple[DataFrame, int]:
+    """Peel the rows of ``e`` to a fixpoint: each round replaces the
+    state ``cur`` by ``keep(cur)``, the rows of ``cur`` that survive
+    the round. Returns the checkpointed fixpoint and its row count.
+    One checkpoint per round; the loop halts when a round keeps every
+    row (its row count is unchanged) or nothing is left."""
+    cur, n = _superstep(e)
+    for _ in range(max_iter):
+        if n == 0:
+            return cur, 0
+        nxt, m = _superstep(keep(cur))
+        if m == n:
+            return nxt, m
+        cur, n = nxt, m
+    raise FixpointNotReached(name, max_iter)
+
+
+def _induced(e: DataFrame, ids: DataFrame) -> DataFrame:
+    """The edges (src, dst) of ``e`` with both endpoints in ``ids``
+    (one column ``src``)."""
+    return e.join(ids, ["src"], "left_semi").join(
+        ids.select(F.col("src").alias("dst")), ["dst"], "left_semi"
+    )
+
+
+def _trim_round(e: DataFrame) -> DataFrame:
+    """One Kahn peel of the edge list ``e`` (src, dst): drop every edge
+    with an endpoint that has no in-edge or no out-edge in ``e`` — the
+    TRIM step of FW-BW-Trim (Hong et al., SC'13). Peeled to a fixpoint
+    (:func:`_peel`), the survivors are the subgraph induced by the
+    vertices that keep both an in- and an out-edge (a vertex in both
+    sets stays in both as the set shrinks, so none of its edges is
+    ever dropped); every peeled vertex is a singleton SCC."""
+    both = e.select("src").dropDuplicates().join(
+        e.select(F.col("dst").alias("src")), ["src"], "left_semi"
+    )
+    return _induced(e, both)
 
 
 def reachable_from(
@@ -472,20 +530,21 @@ def bidirectional_distance(
     Sound termination (the classic off-by-one trap): a first meeting
     at depths (df, db) does NOT prove minimality — the loop continues
     until best <= df + db + 1, at which point any undiscovered path
-    would be longer than the best found. Per-round driver work is two
-    frontier counts and a 1-row min (the bounded parameter-bind
-    pattern). Returns 1 row (dist) or 0 rows if unreachable within
-    max_depth."""
+    would be longer than the best found. Per-round driver work is a
+    1-row min (the bounded parameter-bind pattern); the frontier sizes
+    that pick the side to expand come from each frontier's checkpoint
+    (:func:`_superstep`). Returns 1 row (dist) or 0 rows if
+    unreachable within max_depth."""
     e = g.edges.select("src", "dst").dropDuplicates()
     er = e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     spark = g.edges.sparkSession
 
-    vf = _truncate(
+    vf, nf = _superstep(
         src.select(F.col("id").alias("v"))
         .dropDuplicates()
         .select("v", F.lit(0).alias("d"))
     )
-    vb = _truncate(
+    vb, nb = _superstep(
         dst.select(F.col("id").alias("v"))
         .dropDuplicates()
         .select("v", F.lit(0).alias("d"))
@@ -506,7 +565,6 @@ def bidirectional_distance(
     while df_depth + db_depth < max_depth:
         if best is not None and best <= df_depth + db_depth + 1:
             break
-        nf, nb = ff.count(), fb.count()
         if nf == 0 and nb == 0:
             break
         if nb == 0 or (nf != 0 and nf <= nb):
@@ -517,7 +575,7 @@ def bidirectional_distance(
                 .join(vf, ["v"], "left_anti")
             )
             df_depth += 1
-            ff = _truncate(step.select("v", F.lit(df_depth).alias("d")))
+            ff, nf = _superstep(step.select("v", F.lit(df_depth).alias("d")))
             vf = _truncate(vf.unionByName(ff))
         else:
             step = (
@@ -527,7 +585,7 @@ def bidirectional_distance(
                 .join(vb, ["v"], "left_anti")
             )
             db_depth += 1
-            fb = _truncate(step.select("v", F.lit(db_depth).alias("d")))
+            fb, nb = _superstep(step.select("v", F.lit(db_depth).alias("d")))
             vb = _truncate(vb.unionByName(fb))
         m = _meet()
         if m is not None and (best is None or m < best):
@@ -693,7 +751,7 @@ def _min_label(
 
 
 def connected_components(
-    g: Graph, max_iter: int = DEFAULT_MAX_ITER, shortcut: bool = True
+    g: Graph, max_iter: int = DEFAULT_MAX_ITER
 ) -> DataFrame:
     """Undirected connected components via hash-min label propagation
     with POINTER HALVING: every vertex adopts the min component id
@@ -718,19 +776,10 @@ def connected_components(
     The convergence flag is computed INSIDE the per-round frame and
     counted while it is checkpointed (:func:`_superstep`) rather than
     by re-joining new-vs-old labels or a probe job — one checkpoint
-    per round. ``shortcut=False`` recovers plain hash-min (the right
-    choice only when diameter is known tiny and the extra join isn't
-    worth it)."""
-    both = (
-        g.edges.select("src", "dst")
-        .unionByName(
-            g.edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        .dropDuplicates()
-    )
-    both = _truncate(both)
+    per round."""
+    both = _truncate(symmetric_edges(g.edges))
     comp = _truncate(g.vertices.select("id", F.col("id").alias("component")))
-    return _min_label(comp, both, shortcut, max_iter, "connected_components")
+    return _min_label(comp, both, True, max_iter, "connected_components")
 
 
 def connected_components_contract(
@@ -760,10 +809,11 @@ def connected_components_contract(
     Returns (id, component), component = min vertex id of the
     component — identical to :func:`connected_components` (asserted
     by tests on deep-chain literal graphs). Isolated vertices label
-    themselves. The per-round edge count (one tiny job over the
-    just-checkpointed edge list) sizes the group count and detects
+    themselves. Each edge-list checkpoint counts its rows
+    (:func:`_superstep`); that count sizes the group count and detects
     termination — the AQE-statistics pattern, not a driver-side
-    compute loop."""
+    compute loop. Raises :class:`FixpointNotReached` when edges still
+    straddle groups after ``max_iter`` rounds."""
     import pandas as pd
 
     spark = g.vertices.sparkSession
@@ -794,7 +844,7 @@ def connected_components_contract(
         out_root = [find(n) for n in out_id]
         return pd.DataFrame({"id": out_id, "root": out_root})
 
-    e = _truncate(
+    e, n_edges = _superstep(
         g.edges.select("src", "dst")
         .filter(F.col("src") != F.col("dst"))
         .dropDuplicates()
@@ -803,9 +853,8 @@ def connected_components_contract(
         g.vertices.select("id", F.col("id").alias("component"))
     )
     for _ in range(max_iter):
-        n_edges = e.count()
         if n_edges == 0:
-            break
+            return comp
         parts = max(1, min(target, -(-n_edges // max_group)))
         stars = (
             e.withColumn("__p", F.pmod(F.xxhash64("src"), F.lit(parts)))
@@ -831,16 +880,18 @@ def connected_components_contract(
             # the next round's empty count (r9: the terminal round
             # was ~1/3 of the closure's wall time on an 886-edge
             # sf0.1 pair graph).
-            break
+            return comp
         ms = m.select(F.col("id").alias("src"), F.col("root").alias("__rs"))
         md = m.select(F.col("id").alias("dst"), F.col("root").alias("__rd"))
-        e = _truncate(
+        e, n_edges = _superstep(
             e.join(ms, ["src"])
             .join(md, ["dst"])
             .select(F.col("__rs").alias("src"), F.col("__rd").alias("dst"))
             .filter(F.col("src") != F.col("dst"))
             .dropDuplicates()
         )
+    if n_edges:
+        raise FixpointNotReached("connected_components_contract", max_iter)
     return comp
 
 
@@ -1352,38 +1403,25 @@ def k_core(
     users/buckets away isolates the hub structure (shared roles,
     nested groups) that actually carries access risk.
 
-    Iterative peeling: drop all vertices with degree < k, restrict
-    edges to survivors, repeat to fixpoint. Converges in at most
-    O(peel-depth) rounds — each round is one hash-agg (degree) + two
-    semi-joins (induced subgraph), lineage truncated per round, no
-    driver-side data beyond the 1-row convergence probe. At 100 TB
+    Iterative peeling (:func:`_peel`): drop all vertices with degree
+    < k, restrict edges to survivors, repeat to fixpoint. Converges in
+    at most O(peel-depth) rounds — each round is one hash-agg (degree)
+    + two semi-joins (induced subgraph), checkpointed with its row
+    count, the halting test: no driver-side data. At 100 TB
     the same plan holds: degrees are map-side-combinable counts and
     the semi-joins shuffle on vertex id, the partitioning every round
     reuses.
 
     Returns (id, core_deg) for k-core members, core_deg the vertex's
-    degree WITHIN the core (>= k by construction).
+    degree WITHIN the core (>= k by construction). Raises
+    :class:`FixpointNotReached` when ``max_iter`` rounds all peel.
     """
-    und = (
-        g.edges.select("src", "dst")
-        .unionByName(
-            g.edges.select(
-                F.col("dst").alias("src"), F.col("src").alias("dst")
-            )
-        )
-        .dropDuplicates()
-    )
-    und = _truncate(und)
-    for _ in range(max_iter):
+
+    def keep(und: DataFrame) -> DataFrame:
         deg = und.groupBy("src").agg(F.count("*").alias("__deg"))
-        if not deg.filter(F.col("__deg") < k).take(1):
-            break
-        keep = deg.filter(F.col("__deg") >= k).select("src")
-        und = _truncate(
-            und.join(keep, ["src"], "left_semi").join(
-                keep.select(F.col("src").alias("dst")), ["dst"], "left_semi"
-            )
-        )
+        return _induced(und, deg.filter(F.col("__deg") >= k).select("src"))
+
+    und, _ = _peel(symmetric_edges(g.edges), keep, max_iter, "k_core")
     return und.groupBy(F.col("src").alias("id")).agg(
         F.count("*").cast("bigint").alias("core_deg")
     )
@@ -1398,7 +1436,8 @@ def coreness(g: Graph, max_iter: int = DEFAULT_MAX_ITER) -> DataFrame:
     exactly the coreness. The sequence is monotone non-increasing,
     so convergence is guaranteed; each round is one shuffle join
     (attach neighbour values) + one window PARTITIONED by vertex +
-    the 1-row convergence probe, lineage truncated per round — the
+    one join flagging the changed values, checkpointed with its
+    flagged-row count (:func:`_superstep`) as the halting test — the
     same scale shape as the other fixpoint loops here, and far
     cheaper than |V| sequential Batagelj-Zaversnik peels, which
     don't distribute.
@@ -1408,19 +1447,11 @@ def coreness(g: Graph, max_iter: int = DEFAULT_MAX_ITER) -> DataFrame:
     rank order among equal values doesn't change the result, so the
     window tie-break can stay engine-default. Returns
     (id, coreness) for vertices with >= 1 edge (isolated vertices
-    have coreness 0 and are omitted)."""
+    have coreness 0 and are omitted). Raises
+    :class:`FixpointNotReached` when ``max_iter`` rounds all change."""
     from pyspark.sql.window import Window
 
-    und = (
-        g.edges.select("src", "dst")
-        .unionByName(
-            g.edges.select(
-                F.col("dst").alias("src"), F.col("src").alias("dst")
-            )
-        )
-        .dropDuplicates()
-    )
-    und = _truncate(und)
+    und = _truncate(symmetric_edges(g.edges))
     h = (
         und.groupBy("src")
         .agg(F.count(F.lit(1)).cast("bigint").alias("h"))
@@ -1442,18 +1473,15 @@ def coreness(g: Graph, max_iter: int = DEFAULT_MAX_ITER) -> DataFrame:
                 .alias("h")
             )
         )
-        hnew = _truncate(hnew)
-        changed = (
-            hnew.join(
-                h.select("id", F.col("h").alias("__old")), ["id"]
-            )
-            .where(F.col("h") != F.col("__old"))
-            .take(1)
+        hnew, n = _superstep(
+            hnew.join(h.select("id", F.col("h").alias("__old")), ["id"])
+            .select("id", "h", (F.col("h") != F.col("__old")).alias("__chg")),
+            F.col("__chg"),
         )
-        h = hnew
-        if not changed:
-            break
-    return h.select("id", F.col("h").alias("coreness"))
+        h = hnew.drop("__chg")
+        if n == 0:
+            return h.select("id", F.col("h").alias("coreness"))
+    raise FixpointNotReached("coreness", max_iter)
 
 
 def link_prediction(
@@ -1499,21 +1527,9 @@ def link_prediction(
     keyed = g.vertices.select(
         "id", F.struct("label", key_col.alias("key")).alias("nk")
     )
-    und = (
-        g.edges.select("src", "dst")
-        .unionByName(
-            g.edges.select(
-                F.col("dst").alias("src"), F.col("src").alias("dst")
-            )
-        )
-        .dropDuplicates()
-    )
+    und = symmetric_edges(g.edges)
     deg = und.groupBy("src").agg(F.count("*").alias("__d"))
-    keep = deg.filter(F.col("__d") <= max_degree).select("src")
-    e2 = (
-        und.join(keep, ["src"], "left_semi")
-        .join(keep.select(F.col("src").alias("dst")), ["dst"], "left_semi")
-    )
+    e2 = _induced(und, deg.filter(F.col("__d") <= max_degree).select("src"))
     # keyed endpoints (c = wedge center)
     ek = (
         e2.join(keyed.select(F.col("id").alias("dst"), "nk"), ["dst"])
@@ -1937,36 +1953,6 @@ def stress_centrality(
     )
 
 
-def _trim(
-    e: DataFrame, max_iter: int, name: str
-) -> tuple[DataFrame, int]:
-    """Kahn peel of the edge list ``e`` (src, dst) to a fixpoint: each
-    round drops every edge with an endpoint that has no in-edge or no
-    out-edge among the remaining edges — the TRIM step of FW-BW-Trim
-    (Hong et al., SC'13). The survivors are the subgraph induced by
-    the vertices that keep both an in- and an out-edge (a vertex in
-    both sets stays in both as the set shrinks, so none of its edges
-    is ever dropped); every peeled vertex is a singleton SCC. Returns
-    the checkpointed core and its edge count. One checkpoint per
-    round; it halts when a round peels no edge."""
-    cur, n = _superstep(e)
-    for _ in range(max_iter):
-        if n == 0:
-            return cur, 0
-        both = cur.select("src").dropDuplicates().join(
-            cur.select(F.col("dst").alias("src")), ["src"], "left_semi"
-        )
-        nxt, m = _superstep(
-            cur.join(both, ["src"], "left_semi").join(
-                both.select(F.col("src").alias("dst")), ["dst"], "left_semi"
-            )
-        )
-        if m == n:
-            return nxt, m
-        cur, n = nxt, m
-    raise FixpointNotReached(name, max_iter)
-
-
 def cycle_core(
     g: Graph,
     edge_label: str | None = "in",
@@ -1986,15 +1972,17 @@ def cycle_core(
     reference's recursive getGroupMembers crawl (main.go:257-303)
     would simply not terminate on one.
 
-    The peel is :func:`_trim`, the trim step SCC runs first. Returns
-    (id,); empty on a DAG (the built IAM graph is one — pinned by the
-    catalog census; literal cyclic graphs are pinned by unit test)."""
+    The peel is :func:`_trim_round` run to a fixpoint, the trim step
+    SCC runs first. Returns (id,); empty on a DAG (the built IAM graph
+    is one — pinned by the catalog census; literal cyclic graphs are
+    pinned by unit test)."""
     # Self-loops are KEPT: a group directly a member of itself is the
     # simplest membership loop the audit exists to catch (and hangs
     # the reference's recursive crawl exactly like a 2-cycle). A
     # self-loop vertex holds both degrees, so the peel retains it.
-    core, _ = _trim(
-        _edge_pairs(g, edge_label).dropDuplicates(), max_iter, "cycle_core"
+    core, _ = _peel(
+        _edge_pairs(g, edge_label).dropDuplicates(), _trim_round, max_iter,
+        "cycle_core",
     )
     # every core vertex keeps an out-edge, so the sources list them all
     return core.select(F.col("src").alias("id")).dropDuplicates()
@@ -2027,16 +2015,17 @@ def k_truss(
     Degrees — and with them the orientation — are recomputed from the
     surviving edge set each round; lineage truncated per round.
     Returns the surviving UNDIRECTED canonical edges (a, b) with
-    their final support."""
+    their final support: the state carries each edge's support, and
+    the round that drops no edge (:func:`_peel`) computed it on the
+    final edge set. Raises :class:`FixpointNotReached` when
+    ``max_iter`` rounds all drop edges."""
     e = g.edges.select("src", "dst").filter(
         F.col("src") != F.col("dst")
     )
-    canon = _truncate(
-        e.select(
-            F.least("src", "dst").alias("a"),
-            F.greatest("src", "dst").alias("b"),
-        ).dropDuplicates()
-    )
+    canon = e.select(
+        F.least("src", "dst").alias("a"),
+        F.greatest("src", "dst").alias("b"),
+    ).dropDuplicates()
 
     def _support(c: DataFrame) -> DataFrame:
         sym = c.select("a", "b").unionByName(
@@ -2120,31 +2109,21 @@ def k_truss(
             .agg(F.count("*").cast("bigint").alias("support"))
         )
 
-    if k <= 2:
-        # support >= k-2 <= 0 keeps EVERY edge, including
-        # triangle-free ones that produce no support row at all — the
-        # semi-join below would wrongly drop them (a 2-truss is the
-        # whole graph). Short-circuit with the final support attach.
-        sup = _support(canon)
-        return canon.join(sup, ["a", "b"], "left").select(
-            "a", "b", F.coalesce("support", F.lit(0)).alias("support")
+    def keep(c: DataFrame) -> DataFrame:
+        c = c.select("a", "b")
+        # an edge in no triangle has no support row: support 0
+        return (
+            c.join(_support(c), ["a", "b"], "left")
+            .select("a", "b", F.coalesce("support", F.lit(0)).alias("support"))
+            .filter(F.col("support") >= k - 2)
         )
-    for _ in range(max_iter):
-        sup = _support(canon)
-        kept = canon.join(
-            sup.filter(F.col("support") >= k - 2).select("a", "b"),
-            ["a", "b"],
-            "left_semi",
-        )
-        kept = _truncate(kept)
-        dropped = canon.join(kept, ["a", "b"], "left_anti")
-        canon = kept
-        if not dropped.take(1):
-            break
-    sup = _support(canon)
-    return canon.join(sup, ["a", "b"], "left").select(
-        "a", "b", F.coalesce("support", F.lit(0)).alias("support")
+
+    # the initial support column only types the result of an edgeless graph
+    truss, _ = _peel(
+        canon.withColumn("support", F.lit(0).cast("bigint")), keep,
+        max_iter, "k_truss",
     )
+    return truss
 
 
 def strongly_connected_components(
@@ -2165,13 +2144,14 @@ def strongly_connected_components(
     (id, scc) where scc = the MIN id of the component (unique,
     deterministic, engine-reproducible).
 
-    Per outer round: (0) TRIM (:func:`_trim`) — peel, to a fixpoint,
-    every vertex with no in-edge or no out-edge in the remaining graph;
-    each is a singleton SCC; (1) propagate min ids FORWARD over the
-    trimmed core to fixpoint — color(v) = the least id that can reach
-    v in the remaining graph; (2) every vertex whose color is itself
-    is a ROOT, and for members of SCC(root), root is the component min
-    (a smaller member would have recolored the root); (3) confirm
+    Per outer round: (0) TRIM (:func:`_trim_round`) — peel, to a
+    fixpoint, every vertex with no in-edge or no out-edge in the
+    remaining graph; each is a singleton SCC; (1) propagate min ids
+    FORWARD over the trimmed core to fixpoint — color(v) = the least
+    id that can reach v in the remaining graph; (2) every vertex whose
+    color is itself is a ROOT, and for members of SCC(root), root is
+    the component min (a smaller member would have recolored the
+    root); (3) confirm
     backward within each color: BFS from the roots along REVERSED
     edges between equal-colored endpoints — confirmed vertices are
     exactly SCC(root); (4) delete them and repeat on the residue.
@@ -2194,7 +2174,7 @@ def strongly_connected_components(
     )
     settled = verts.select("id", F.col("id").alias("scc")).limit(0)
     for _ in range(max_iter):
-        e, n = _trim(e, max_iter, name)
+        e, n = _peel(e, _trim_round, max_iter, name)
         if n == 0:
             return verts.join(settled, ["id"], "left_outer").select(
                 "id", F.coalesce("scc", "id").alias("scc")
@@ -2243,12 +2223,13 @@ def dag_levels(
 
     Bellman-Ford-max relaxation: each round pushes level+1 along
     edges and max-merges (one shuffle per round, convergence flag
-    computed in-frame, lineage truncated) — rounds = DAG depth, which
-    for audit graphs is single digits. On a CYCLIC graph longest path
-    is ill-defined (NP-hard general; unbounded through a cycle): the
-    loop stops at max_iter, so run cycle_core /
-    strongly_connected_components first when acyclicity is not known.
-    Returns (id, level)."""
+    computed in-frame and counted at the checkpoint, :func:`_superstep`)
+    — rounds = DAG depth, which for audit graphs is single digits. On
+    a CYCLIC graph longest path is ill-defined (NP-hard general;
+    unbounded through a cycle): levels grow every round and the loop
+    raises :class:`FixpointNotReached` at max_iter, so run cycle_core
+    / strongly_connected_components first when acyclicity is not
+    known. Returns (id, level)."""
     e = _truncate(
         _edge_pairs(g, edge_label)
         .filter(F.col("src") != F.col("dst"))
@@ -2279,9 +2260,8 @@ def dag_levels(
                 & (F.col("cand") > F.col("level"))
             ).alias("__chg"),
         )
-        new_lvl = _truncate(new_lvl)
-        changed = new_lvl.filter(F.col("__chg")).take(1)
+        new_lvl, n = _superstep(new_lvl, F.col("__chg"))
         lvl = new_lvl.drop("__chg")
-        if not changed:
-            break
-    return lvl
+        if n == 0:
+            return lvl
+    raise FixpointNotReached("dag_levels", max_iter)

@@ -277,16 +277,3 @@ def build_graph(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]
         build_edges(spark, sf_dir).hint("rebalance"),
     )
 
-
-def save_graph(
-    vertices: DataFrame, edges: DataFrame, path: str
-) -> None:
-    """Persist the graph the way a 100 TB deployment would lay it out:
-    vertices partitioned by label (partition pruning for hasLabel
-    scans, SURVEY.md §4.4), edges repartitioned by src so expansion
-    joins read co-located data.
-    """
-    vertices.write.mode("overwrite").partitionBy("label").parquet(
-        f"{path}/vertices"
-    )
-    edges.repartition("src").write.mode("overwrite").parquet(f"{path}/edges")

@@ -248,70 +248,49 @@ class Traversal:
 
         ``until=None`` is ``until(out().count().is(0))`` — run to the
         empty-frontier fixpoint; the result is every vertex reachable
-        in >= 1 step (Gremlin's emit-union minus the start set). This
-        form COMPILES TO algorithms.reachable_from itself — the same
-        checkpointed-per-round, anti-join-deduped BFS loop, so the
-        physical plan is identical to the algorithms path by
-        construction (two surfaces, one loop), plus one left_semi to
-        re-attach vertex properties.
+        in >= 1 step (Gremlin's emit-union minus the start set).
 
         ``until=<Column>`` is the predicate form: traversers HALT at
         the first vertex (depth >= 1, do-while like Gremlin's
         trailing until) where the predicate holds and stop expanding;
         the result is the halted set, bag-collapsed to distinct
         vertices. A NULL predicate value counts as not-matching
-        (the traverser keeps going), Gremlin's filter semantics.
+        (the traverser keeps going), Gremlin's filter semantics. A
+        halted vertex stops expanding, so this is a BFS from the start
+        set over the edges whose source is a start vertex or a vertex
+        where the predicate does not hold; the halted set is the
+        vertices it reaches at depth >= 1 where the predicate holds.
 
-        Like reachable_from, at most one edge label is supported per
-        loop (the reference's traversals always repeat over the
-        single 'in' membership label)."""
-        assert self._kind == "V"
-        assert len(labels) <= 1, "repeat_out_until: one edge label max"
-        from .algorithms import _truncate, reachable_from
+        Both forms compile to the frontier BFS behind
+        algorithms.reachable_from (``_bfs``) — one checkpoint per
+        round, the new frontier's row count the halting test — plus
+        one left_semi to re-attach vertex properties. Like
+        reachable_from, the loop raises ``FixpointNotReached`` when
+        the frontier is still non-empty after ``max_iter`` rounds, and
+        at most one edge label is supported per loop (the reference's
+        traversals always repeat over the single 'in' membership
+        label)."""
+        if self._kind != "V":
+            raise ValueError("repeat_out_until: needs a vertex traversal")
+        if len(labels) > 1:
+            raise ValueError("repeat_out_until: one edge label max")
+        from .algorithms import _bfs, _edge_pairs
 
-        label = labels[0] if labels else None
         verts = self._g.vertices
-        if until is None:
-            ids = reachable_from(
-                self._g,
-                self._df.select("id"),
-                edge_label=label,
-                max_iter=max_iter,
+        start = self._df.select("id")
+        edges = _edge_pairs(self._g, labels[0] if labels else None)
+        if until is not None:
+            halts = F.coalesce(until, F.lit(False))
+            expands = start.unionByName(verts.filter(~halts).select("id"))
+            edges = edges.join(
+                expands.select(F.col("id").alias("src")), ["src"], "left_semi"
             )
-            out = verts.join(ids.select("id"), ["id"], "left_semi")
-            return Traversal(self._g, out, "V")
-        edges = self._g.edges
-        if label is not None:
-            edges = edges.filter(F.col("label") == label)
-        edges = edges.select("src", "dst")
-        cond = F.coalesce(until, F.lit(False))
-        frontier = _truncate(self._df.select("id").dropDuplicates())
-        visited = frontier
-        halted = None
-        for _ in range(max_iter):
-            nxt = (
-                frontier.join(edges, frontier.id == edges.src)
-                .select(F.col("dst").alias("id"))
-                .dropDuplicates()
-                .join(visited, ["id"], "left_anti")
-            )
-            nxt = _truncate(nxt)
-            if not nxt.take(1):
-                break
-            visited = _truncate(visited.unionByName(nxt))
-            nxt_v = verts.join(nxt, ["id"], "left_semi")
-            stop = nxt_v.filter(cond).select("id")
-            halted = (
-                stop if halted is None else halted.unionByName(stop)
-            )
-            halted = _truncate(halted)
-            frontier = _truncate(nxt_v.filter(~cond).select("id"))
-        if halted is None:
-            out = verts.join(
-                self._df.select("id").limit(0), ["id"], "left_semi"
-            )
-        else:
-            out = verts.join(halted, ["id"], "left_semi")
+        reached = _bfs(start, edges, max_iter, "repeat_out_until").filter(
+            F.col("distance") > 0
+        )
+        out = verts.join(reached.select("id"), ["id"], "left_semi")
+        if until is not None:
+            out = out.filter(halts)
         return Traversal(self._g, out, "V")
 
     # ---- semi-join filters (the A14 pattern) ---------------------------

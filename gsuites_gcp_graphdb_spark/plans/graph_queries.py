@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..graph.algorithms import reachable_from
+from ..graph.algorithms import reachable_from, symmetric_edges
 from ..graph.build import build_graph
 from ..graph.schema import natural_key_col, vertex_id
 from ..graph.traversal import Graph
@@ -1075,15 +1075,7 @@ def degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     (degree, moment sums) + one join of the edge ends against the
     degree table — no window, no collect."""
     g = _graph(spark, sf_dir)
-    e = g.edges.select("src", "dst").filter(
-        F.col("src") != F.col("dst")
-    )
-    und = (
-        e.unionByName(
-            e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        .dropDuplicates()
-    )
+    und = symmetric_edges(g.edges.filter(F.col("src") != F.col("dst")))
     deg = und.groupBy(F.col("src").alias("__v")).agg(
         F.count("*").cast("long").alias("__d")
     )
@@ -1136,10 +1128,7 @@ def label_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     handful of map-combinable hash-aggs, one-row crossJoins — no
     window, no collect."""
     g = _graph(spark, sf_dir)
-    e = g.edges.select("src", "dst").filter(F.col("src") != F.col("dst"))
-    und = e.unionByName(
-        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).dropDuplicates()
+    und = symmetric_edges(g.edges.filter(F.col("src") != F.col("dst")))
     vl = g.vertices.select("id", "label")
     p = (
         und.join(vl, und.src == vl.id)
@@ -1862,12 +1851,7 @@ def degree_heterogeneity(
     g_degree_histogram's full distribution. Exact DECIMAL(38)
     moments, one shared division."""
     g = _graph(spark, sf_dir)
-    e = g.edges.select("src", "dst").filter(
-        F.col("src") != F.col("dst")
-    )
-    und = e.unionByName(
-        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).dropDuplicates()
+    und = symmetric_edges(g.edges.filter(F.col("src") != F.col("dst")))
     deg = und.groupBy("src").agg(F.count("*").alias("__d"))
     d38 = "decimal(38,0)"
     s = deg.agg(
@@ -2490,16 +2474,7 @@ def diameter_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..graph.traversal import Graph as _G
 
     g = _graph(spark, sf_dir)
-    und = _G(
-        g.vertices,
-        g.edges.select("src", "dst")
-        .unionByName(
-            g.edges.select(
-                F.col("dst").alias("src"), F.col("src").alias("dst")
-            )
-        )
-        .dropDuplicates(),
-    )
+    und = _G(g.vertices, symmetric_edges(g.edges))
     users = g.V().hasLabel("user").toDF()
     target = users.agg(F.min("email").alias("email"))
     src = users.join(target, ["email"], "left_semi").select("id")

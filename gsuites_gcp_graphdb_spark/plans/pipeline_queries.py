@@ -1420,14 +1420,6 @@ def media_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bench-only (xxhash64-based; no portable SQL twin — the md5
-    variant ns_dedup_simhash_md5 is the oracle-checked sibling)."""
-    dd.release_scratch()
-    docs = load_table(spark, sf_dir, "documents")
-    return dd.simhash_candidates(docs, max_hamming=3)
-
-
 def _sql_minhash_sig() -> str:
     mins = ",\n        ".join(
         f"""list_min(list_transform(sh, s -> md5(s || '|{j}'))) AS mh_{j}"""

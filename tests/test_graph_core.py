@@ -140,6 +140,15 @@ def test_repeat_out_until(golden):
     assert none.count() == 0
 
 
+def test_repeat_out_until_rejects_bad_input(golden):
+    """Input checks raise ValueError, so they survive ``python -O``:
+    the loop repeats over one edge label and starts from vertices."""
+    with pytest.raises(ValueError, match="one edge label"):
+        golden.V().repeat_out_until("in", "member")
+    with pytest.raises(ValueError, match="vertex traversal"):
+        golden.E().repeat_out_until("in")
+
+
 def test_auto_broadcast_probe(golden, spark):
     """r10 hint-free routing: _probe_frontier_bytes returns an honest
     n*32 estimate when the frontier fits the broadcast row cap, None
